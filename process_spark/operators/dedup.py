@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from process_spark.functions.textfn import simhash64, tokens
+from process_spark.operators.execution import cut_lineage
 
 
 def exact_dedup(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
@@ -38,15 +39,6 @@ def keep_latest(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def content_hash_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact near-trivial text dedup: normalize whitespace+case, keep
-    one doc per xxhash64 of the normalized text."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    return keep_latest(
-        df.withColumn("__h", F.xxhash64(norm)), ["__h"], df.columns[0], desc=False
-    ).drop("__h")
 
 
 #: 31-bit prime from the universal-hash family ``(a*h + b) mod p`` —
@@ -89,37 +81,6 @@ def _fast_shingles(text: Column, n: int = 3) -> Column:
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    base_hash: str = "xxhash64",
-) -> DataFrame:
-    """MinHash signature per document, as pure expressions.
-
-    Shingle (word n-grams) → base hash → ``num_hashes`` universal-hash
-    permutations ``(a_i*h + b_i) mod p`` with p a 31-bit prime — the
-    same public hash family Spark MLlib's MinHashLSH uses; min over the
-    shingle set approximates Jaccard (MinHash, Broder '97). The 31-bit
-    prime keeps ``a_i*h`` inside signed-64 arithmetic, and hashing the
-    shingle STRING once (then permuting the integer) is ~num_hashes×
-    cheaper than seeded re-hashes of the bytes per permutation
-    (measured: 1.6 s → sub-second signature stage at sf0.1).
-
-    Physical shape: explode shingles → one hash-aggregate computing all
-    ``num_hashes`` mins at once. Array-HOF per-permutation transforms
-    re-evaluate the tokenize+shingle pipeline per permutation (Catalyst
-    collapses projections back into the consumer — measured 9 s at
-    sf0.1); the explode+agg form is whole-stage-codegen'd, combines
-    map-side, and shuffles only (id, 64×8 bytes) — the same plan shape
-    scales to 100 TB of documents.
-    """
-    mins = _minhash_mins(df, id_col, text_col, num_hashes, shingle_n, base_hash)
-    return mins.select(F.col(id_col), F.col("__mins").alias("minhash"))
-
-
 def _minhash_mins(
     df: DataFrame,
     id_col: str,
@@ -128,7 +89,18 @@ def _minhash_mins(
     shingle_n: int,
     base_hash: str,
 ) -> DataFrame:
-    """Signature mins as ONE ``__mins`` array<bigint> column.
+    """MinHash signature per document as ONE ``__mins`` array<bigint>
+    column, as pure expressions.
+
+    Shingle (word n-grams) → base hash → ``num_hashes`` universal-hash
+    permutations ``(a_i*h + b_i) mod p`` with p a 31-bit prime — the
+    same public hash family Spark MLlib's MinHashLSH uses; min over the
+    shingle set approximates Jaccard (MinHash, Broder '97). Hashing the
+    shingle STRING once (then permuting the integer) is ~num_hashes×
+    cheaper than seeded re-hashes of the bytes per permutation.
+    Physical shape: explode shingles → one hash-aggregate computing all
+    ``num_hashes`` mins at once (whole-stage-codegen'd, combines
+    map-side, shuffles only (id, num_hashes×8 bytes)).
 
     The 64 per-permutation aggregates are assembled as a single SQL
     string parsed server-side by one ``F.expr`` call: building them as
@@ -744,12 +716,6 @@ def connected_components(
     """
     spark = edges.sparkSession
 
-    def cut(df: DataFrame, eager: bool = False) -> DataFrame:
-        if checkpoint_dir is not None:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
-
     e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
     sym = e.union(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
     # Pin the symmetrized edges PRE-PARTITIONED on the join key (__d):
@@ -761,7 +727,7 @@ def connected_components(
     # partitioning must stay stable across iterations for the reuse to
     # hold.
     n_part = spark.sparkContext.defaultParallelism
-    sym = cut(sym.repartition(n_part, F.col("__d")))
+    sym = cut_lineage(sym.repartition(n_part, F.col("__d")), checkpoint_dir)
 
     if vertices is None:
         verts = sym.select(F.col("__s").alias("id")).distinct()
@@ -788,13 +754,16 @@ def connected_components(
             )
         )
         # Cut lineage each iteration, LAZILY: the convergence count is
-        # the checkpoint's materializing action, so each iteration runs
-        # ONE job (materialize-and-count) instead of two (eager pin,
-        # then a count over the pinned blocks) — one driver barrier per
-        # round saved (guide §1.5/§5: per-iteration jobs are
-        # cluster-wide barriers; the count reads the same pinned rows
-        # either way).
-        new_labels = cut(new_labels, eager=False)
+        # the checkpoint's materializing action. On the localCheckpoint
+        # path (checkpoint_dir unset) each iteration therefore runs ONE
+        # job (materialize-and-count) instead of two (eager pin, then a
+        # count over the pinned blocks) — one driver barrier per round
+        # saved (per-iteration jobs are cluster-wide barriers; the
+        # count reads the same pinned rows either way).
+        # With checkpoint_dir set, a reliable checkpoint is written by
+        # a SEPARATE job after the count, so that path still runs two
+        # jobs per iteration.
+        new_labels = cut_lineage(new_labels, checkpoint_dir)
         n_changed = new_labels.filter(F.col("__changed")).count()
         labels = new_labels.drop("__changed")
         if n_changed == 0:
@@ -835,20 +804,12 @@ def connected_components_star(
     per round); lineage is cut per round (localCheckpoint, or
     ``checkpoint_dir`` for executor-loss-proof state at cluster
     scale — same contract as the propagation twin)."""
-    spark = edges.sparkSession
-
-    def cut(df: DataFrame, eager: bool = False) -> DataFrame:
-        if checkpoint_dir is not None:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
-
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    e = cut(e, eager=True)
+    e = cut_lineage(e, checkpoint_dir, eager=True)
 
     converged = e.limit(1).count() == 0  # no edges → trivially a forest
     for _ in range(max_iter):
@@ -878,7 +839,7 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        small = cut(small, eager=True)
+        small = cut_lineage(small, checkpoint_dir, eager=True)
         # fixpoint: the edge SET is unchanged (two bounded counts —
         # the driver never sees edges, only the two scalars)
         if (

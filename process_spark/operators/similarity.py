@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from process_spark.functions.vectorfn import dot, l2_norm, unit_with
+from process_spark.operators.execution import cut_lineage
 
 
 def brute_force_knn(
@@ -220,40 +221,49 @@ def ivf_build(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     seed_mod: int = 9973,
-    scorer: str = "expr",
     seed_hash: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
     """O68 scale path — IVF index: deterministic seed vectors (every
     ``hash(id) % (n/n_cells)``-th vector) act as coarse centroids; one
-    Lloyd refinement; each vector assigned to its nearest cell.
+    Lloyd refinement; each vector assigned to its nearest cell. That is
+    exactly :func:`kmeans` with ``n_iter=1``.
 
     Returns (cells, assignments). ``cells`` is small (n_cells rows) —
     always broadcastable; ``assignments`` adds a ``cell_id`` to every
     corpus row, ready to be written bucketed/partitioned by cell.
-
-    ``scorer``: "expr" (default — bit-reproducible HOF dots) or
-    "arrow" (BLAS matmul assignment, the throughput path at scale —
-    see SCALE.md k-means shoot-out).
 
     ``seed_hash``: "xxhash64" (default — cheapest) or "md5" (first 8
     hex chars of md5(id) as a 32-bit int — byte-reproducible in DuckDB,
     which is what lets the WHOLE build→assign→refine→search chain carry
     a cross-engine oracle; same base-hash trade as minhash_lsh_pairs).
     """
-    assign_fn = _pick_assigner(scorer)
-    # Fan out + pin the corpus once: it is scanned three times (seed
-    # pick, assign, refined assign), each with per-row interpreted-HOF
-    # scoring, so the exchange parallelizes the CPU-bound stages and the
-    # lazy localCheckpoint stops the rescan+reshuffle per reuse.
-    n_part = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus = corpus.repartition(n_part, F.col(corpus_id)).localCheckpoint(
-        eager=False
+    return kmeans(
+        corpus,
+        k=n_cells,
+        n_iter=1,
+        corpus_id=corpus_id,
+        vec_col=vec_col,
+        seed_mod=seed_mod,
+        seed_hash=seed_hash,
     )
-    # Deterministic sample of n_cells seeds (no Math.random — stable
-    # runs). orderBy().limit() is a distributed TakeOrdered (per-
-    # partition top-k, k-row merge on the driver) — never the
-    # unpartitioned-window single-partition sort of the whole corpus;
-    # the row_number window then runs over the n_cells-row result only.
+
+
+def _seed_cells(
+    corpus: DataFrame,
+    k: int,
+    corpus_id: str,
+    vec_col: str,
+    seed_mod: int,
+    seed_hash: str,
+) -> DataFrame:
+    """The deterministic k-row seed table (cell_id, centroid) that
+    :func:`kmeans` (and so :func:`ivf_build`) starts from: the ``k``
+    vectors with the smallest ``hash(id) % seed_mod`` (ties by id), no
+    RNG so replays are bit-stable. orderBy().limit() is a distributed
+    TakeOrdered (per-partition top-k, k-row merge on the driver) —
+    never the unpartitioned-window single-partition sort of the whole
+    corpus; the row_number window then runs over the k-row result
+    only."""
     if seed_hash == "md5":
         base = F.conv(
             F.substring(F.md5(F.col(corpus_id).cast("string")), 1, 8), 16, 10
@@ -264,120 +274,30 @@ def ivf_build(
     topk = (
         corpus.select(F.col(corpus_id), F.col(vec_col), key.alias("__key"))
         .orderBy("__key", corpus_id)
-        .limit(n_cells)
+        .limit(k)
     )
     w = Window.orderBy("__key", corpus_id)
-    seeds = topk.select(
+    return topk.select(
         (F.row_number().over(w) - 1).alias("cell_id"),
         F.col(vec_col).alias("centroid"),
     )
-    # One refinement pass: recompute cell means, reassign.
-    if scorer == "arrow":
-        refined = _refine_cells_arrow(corpus, seeds, vec_col)
-    else:
-        assign = assign_fn(corpus, seeds, corpus_id, vec_col)
-        refined = (
-            assign.select(
-                "cell_id", F.posexplode(F.col(vec_col)).alias("pos", "v")
-            )
-            .groupBy("cell_id", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("cell_id")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("__p")
-            )
-            .select(
-                "cell_id",
-                F.transform("__p", lambda p: p.getField("m").cast("float")).alias(
-                    "centroid"
-                ),
-            )
-        )
-    # Lazy pin on the n_cells-row refined cell table: BOTH outputs
-    # consume it (the returned cells relation and the assignments'
-    # broadcast build) — unpinned, the whole seed → assign → refine
-    # chain re-executed inside the assignments job even when a caller
-    # pinned the returned cells (the assignments' lineage pointed at
-    # the un-pinned subtree). One refinement per build also removes a
-    # latent ULP hazard: two executions of the float avg could in
-    # principle reduce in different orders; the pin makes every
-    # consumer read the identical centroid bits.
-    refined = refined.localCheckpoint(eager=False)
-    assignments = assign_fn(corpus, refined, corpus_id, vec_col)
-    return refined, assignments
 
 
-def _refine_cells_arrow(
-    corpus: DataFrame, cells: DataFrame, vec_col: str
+def ivf_assign(
+    corpus: DataFrame,
+    cells: DataFrame,
+    corpus_id: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Fused assign-and-recompute for the Arrow k-means path: ONE
-    mapInPandas pass per iteration matmul-assigns each batch to its
-    nearest broadcast centroid and immediately reduces it to PARTIAL
-    (sum-vector, count) rows per (batch, cell). Only those tiny
-    partials (n_batches · k rows) are shuffled; assignment rows are
-    never materialized mid-loop. The expression path posexplodes the
-    whole corpus x dim into its hash aggregate each iteration — at
-    scale that shuffle is dim x corpus, here it is k x n_batches.
-    Means are sum/count of partials (float summation order differs
-    from the expression path by ULPs — the arrow path's contract)."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    cpdf = cells.toPandas().sort_values("cell_id")
-    cmat = np.stack(cpdf["centroid"].to_numpy()).astype("float64")
-    cn = np.linalg.norm(cmat, axis=1)
-    keep = cn > 0
-    cell_ids = cpdf["cell_id"].to_numpy()[keep]
-    cunit = cmat[keep] / cn[keep, None]
-    bc = corpus.sparkSession.sparkContext.broadcast((cell_ids, cunit))
-
-    def assign_reduce(batches):
-        ids_c, cu = bc.value
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]  # NULL vector → unassigned
-            if not len(pdf) or not len(ids_c):
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            best = np.argmax(mat @ cu.T, axis=1)
-            out_c, out_n, out_s = [], [], []
-            for b in np.unique(best):
-                sel = mat[best == b]
-                out_c.append(int(ids_c[b]))
-                out_n.append(sel.shape[0])
-                out_s.append(sel.sum(axis=0))
-            yield pd.DataFrame({"cell_id": out_c, "n": out_n, "s": out_s})
-
-    parts = corpus.select(vec_col).mapInPandas(
-        assign_reduce, schema="cell_id int, n long, s array<double>"
-    )
-    per_dim = (
-        parts.select("cell_id", "n", F.posexplode("s").alias("pos", "v"))
-        .groupBy("cell_id", "pos")
-        .agg((F.sum("v") / F.sum("n")).alias("m"))
-    )
-    return (
-        per_dim.groupBy("cell_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("__p"))
-        .select(
-            "cell_id",
-            F.transform("__p", lambda p: p.getField("m").cast("float")).alias(
-                "centroid"
-            ),
-        )
-    )
-
-
-def _pick_assigner(scorer: str):
-    if scorer == "expr":
-        return _assign_cells
-    if scorer == "arrow":
-        return _assign_cells_arrow
-    raise ValueError(f"unknown scorer {scorer!r}: use 'expr' or 'arrow'")
-
-
-def _assign_cells(
-    corpus: DataFrame, cells: DataFrame, corpus_id: str, vec_col: str
-) -> DataFrame:
+    """O68 — the incremental-index APPEND step: assign NEW vectors to
+    an EXISTING (already-refined) cell table, no retrain — exactly
+    what continuous ingestion does between periodic rebuilds. Returns
+    (corpus_id, vec_col, cell_id) rows, partition-consistent with
+    ivf_build's assignments, so appending them
+    ``partitionBy(cell_id)`` extends a stored IVF index in place (the
+    lifecycle vec_ivf_stored_append registers and oracle-checks).
+    Centroid drift is the rebuild trigger, not this step's job. It is
+    also the assignment step of every :func:`kmeans` round."""
     # Nearest-cell RANKING for a fixed vector v is invariant to |v|, so
     # score against unit centroids with a plain dot: n_cells norm folds
     # total (in the broadcast) and one dot per (vector, cell) pair —
@@ -402,67 +322,6 @@ def _assign_cells(
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(corpus_id, vec_col, "cell_id")
-    )
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    cells: DataFrame,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    scorer: str = "expr",
-) -> DataFrame:
-    """O68 — the incremental-index APPEND step: assign NEW vectors to
-    an EXISTING (already-refined) cell table, no retrain — exactly
-    what continuous ingestion does between periodic rebuilds. Returns
-    (corpus_id, vec_col, cell_id) rows, partition-consistent with
-    ivf_build's assignments, so appending them
-    ``partitionBy(cell_id)`` extends a stored IVF index in place (the
-    lifecycle vec_ivf_stored_append registers and oracle-checks).
-    Centroid drift is the rebuild trigger, not this step's job."""
-    return _pick_assigner(scorer)(corpus, cells, corpus_id, vec_col)
-
-
-def _assign_cells_arrow(
-    corpus: DataFrame, cells: DataFrame, corpus_id: str, vec_col: str
-) -> DataFrame:
-    """Arrow/BLAS twin of :func:`_assign_cells` — one matmul per Arrow
-    batch against the broadcast unit-centroid matrix instead of one
-    interpreted dot per (vector, cell) pair. Assignment ties resolve to
-    the LOWEST cell_id (argmax returns the first maximum; columns are
-    ordered by cell_id), matching the expression path's row_number
-    tie-break. No shuffle: assignment is a map-side projection."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-
-    cpdf = cells.toPandas().sort_values("cell_id")
-    cmat = np.stack(cpdf["centroid"].to_numpy()).astype("float64")
-    cn = np.linalg.norm(cmat, axis=1)
-    keep = cn > 0  # degenerate cell → unprobeable (expression-path twin)
-    cell_ids = cpdf["cell_id"].to_numpy()[keep]
-    cunit = cmat[keep] / cn[keep, None]
-    bc = corpus.sparkSession.sparkContext.broadcast((cell_ids, cunit))
-
-    def assign(batches):
-        ids_c, cu = bc.value
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]  # NULL vector → unassigned
-            if not len(pdf) or not len(ids_c):
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            best = np.argmax(mat @ cu.T, axis=1)
-            out = pdf[[corpus_id, vec_col]].copy()
-            out["cell_id"] = ids_c[best]
-            yield out
-
-    # Mirror the input's actual id/vector types (the expression twin is
-    # type-generic; `long`/`array<float>` literals would mistype other
-    # id types or double vectors).
-    id_t = corpus.schema[corpus_id].dataType.simpleString()
-    vec_t = corpus.schema[vec_col].dataType.simpleString()
-    return corpus.select(corpus_id, vec_col).mapInPandas(
-        assign,
-        schema=f"{corpus_id} {id_t}, {vec_col} {vec_t}, cell_id int",
     )
 
 
@@ -496,7 +355,7 @@ def ivf_probe_cells(
 ) -> DataFrame:
     """Probe selection shared by :func:`ivf_search` and the stored-
     index queries: rank every (query, probeable cell) by dot against
-    the unit centroid (same |v|-invariance as ``_assign_cells``), keep
+    the unit centroid (same |v|-invariance as ``ivf_assign``), keep
     the ``n_probe`` nearest per query. Returns (query_id, cell_id,
     unit query vector) — ≤ |Q|·n_probe rows, the bounded table the
     search broadcasts. Exposed so a cell-PARTITIONED stored index can
@@ -597,7 +456,7 @@ def soft_assign_cells(
 ) -> DataFrame:
     """SOFT IVF assignment: each vector joins its ``n_assign`` nearest
     cells (same dot-with-unit-centroid ranking as the hard
-    ``_assign_cells``) — the standard mitigation for blocked
+    ``ivf_assign``) — the standard mitigation for blocked
     near-dup/ANN losing pairs that straddle a cell boundary: with
     top-2 assignment, a pair split across ONE boundary still shares a
     block. Output rows ≈ n_assign × corpus (each block roughly
@@ -1127,20 +986,21 @@ def kmeans(
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
     seed_mod: int = 9973,
-    scorer: str = "expr",
     checkpoint_dir: str | None = None,
     seed_hash: str = "xxhash64",
 ) -> tuple[DataFrame, DataFrame]:
-    """Lloyd's k-means over an embedding column, fully distributed.
+    """Lloyd's k-means over an embedding column, fully distributed —
+    the one seed-pick + refinement kernel (:func:`ivf_build` is this
+    with ``n_iter=1``).
 
-    Deterministic init (same seeding as :func:`ivf_build` — every
+    Deterministic init (:func:`_seed_cells` — every
     ``hash(id) % seed_mod``-th vector, no RNG so replays are
     bit-stable), then ``n_iter`` rounds of assign → recompute means.
     Each round is one broadcast join (centroids are k rows — always
     broadcastable) plus one hash aggregate over (cluster, dim); no
     driver-side data movement, so the same plan runs at any corpus
-    scale. Iterations are unrolled into the lineage with a
-    localCheckpoint per round to keep plans bounded.
+    scale. Iterations are unrolled into the lineage with a lazy pin
+    per round to keep plans bounded.
 
     Returns (centroids, assignments): centroids(cell_id, centroid),
     assignments(corpus_id, vec_col, cell_id).
@@ -1150,68 +1010,49 @@ def kmeans(
     localCheckpoint blocks die with their executor, and a lost block
     mid-loop restarts the whole fixpoint (same rationale as
     operators.dedup.connected_components).
+
+    ``seed_hash``: "xxhash64" (default) or "md5" — the
+    DuckDB-reproducible seed key (see :func:`ivf_build`).
     """
-    spark = corpus.sparkSession
-
-    def cut(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
-
-    # Same fan-out + pin as ivf_build, amortized across the whole loop:
-    # n_iter+1 assignment passes each score every (vector, centroid)
-    # pair with interpreted HOF folds — parallelize once, rescan never.
+    # Fan out + pin the corpus once, amortized across the whole loop:
+    # the seed pick and n_iter+1 assignment passes each scan it, the
+    # assignments scoring every (vector, centroid) pair with interpreted
+    # HOF folds — so the exchange parallelizes the CPU-bound stages and
+    # the lazy pin stops the rescan+reshuffle per reuse.
     n_part = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus = cut(corpus.repartition(n_part, F.col(corpus_id)))
-    # Same distributed TakeOrdered seed pick as ivf_build: top-k first
-    # (per-partition top-k + k-row merge), tiny-window row_number after.
-    # seed_hash="md5" = the DuckDB-reproducible key (see ivf_build).
-    if seed_hash == "md5":
-        base = F.conv(
-            F.substring(F.md5(F.col(corpus_id).cast("string")), 1, 8), 16, 10
-        ).cast("long")
-    else:
-        base = F.xxhash64(F.col(corpus_id))
-    key = F.pmod(base, F.lit(seed_mod))
-    topk = (
-        corpus.select(F.col(corpus_id), F.col(vec_col), key.alias("__key"))
-        .orderBy("__key", corpus_id)
-        .limit(k)
+    corpus = cut_lineage(
+        corpus.repartition(n_part, F.col(corpus_id)), checkpoint_dir
     )
-    w = Window.orderBy("__key", corpus_id)
-    cents = topk.select(
-        (F.row_number().over(w) - 1).alias("cell_id"),
-        F.col(vec_col).alias("centroid"),
-    )
-    assign_fn = _pick_assigner(scorer)
+    cents = _seed_cells(corpus, k, corpus_id, vec_col, seed_mod, seed_hash)
     for _ in range(n_iter):
-        if scorer == "arrow":
-            # Fused pass: assignment rows never materialize mid-loop.
-            cents = cut(_refine_cells_arrow(corpus, cents, vec_col))
-        else:
-            assign = assign_fn(corpus, cents, corpus_id, vec_col)
-            cents = (
-                assign.select(
-                    "cell_id", F.posexplode(F.col(vec_col)).alias("pos", "v")
-                )
-                .groupBy("cell_id", "pos")
-                .agg(F.avg("v").alias("m"))
-                .groupBy("cell_id")
-                .agg(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))).alias(
-                        "__p"
-                    )
-                )
-                .select(
-                    "cell_id",
-                    F.transform(
-                        "__p", lambda p: p.getField("m").cast("float")
-                    ).alias("centroid"),
-                )
+        assign = ivf_assign(corpus, cents, corpus_id, vec_col)
+        cents = (
+            assign.select(
+                "cell_id", F.posexplode(F.col(vec_col)).alias("pos", "v")
             )
-            cents = cut(cents)
-    assignments = assign_fn(corpus, cents, corpus_id, vec_col)
+            .groupBy("cell_id", "pos")
+            .agg(F.avg("v").alias("m"))
+            .groupBy("cell_id")
+            .agg(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("__p")
+            )
+            .select(
+                "cell_id",
+                F.transform("__p", lambda p: p.getField("m").cast("float")).alias(
+                    "centroid"
+                ),
+            )
+        )
+        # Lazy pin on the k-row centroid table. After the last round
+        # BOTH outputs consume it (the returned centroids and the
+        # assignments' broadcast build) — unpinned, the whole seed →
+        # assign → refine chain re-executed inside the assignments job
+        # even when a caller pinned the returned centroids. It also
+        # removes a latent ULP hazard: two executions of the float avg
+        # could in principle reduce in different orders; the pin makes
+        # every consumer read the identical centroid bits.
+        cents = cut_lineage(cents, checkpoint_dir)
+    assignments = ivf_assign(corpus, cents, corpus_id, vec_col)
     return cents, assignments
 
 

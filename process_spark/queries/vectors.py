@@ -1080,8 +1080,8 @@ def vec_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_md5_oracle(n_iter: int = 2, k: int = 8, seed_mod: int = 9973) -> str:
-    """Generate the DuckDB twin of kmeans(seed_hash='md5', scorer='expr')
-    on the 2-d margin-guarded fixture: the md5-keyed seed pick, then
+    """Generate the DuckDB twin of kmeans(seed_hash='md5') on the
+    2-d margin-guarded fixture: the md5-keyed seed pick, then
     ``n_iter`` unrolled Lloyd iterations (assign → float32-rounded
     per-cell mean — CAST AS REAL matches the engine's centroid cast
     bit-for-bit), then the final assignment. Iterative fixpoints are
@@ -1144,7 +1144,7 @@ def vec_kmeans_md5_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled Lloyd loop (seed pick → assign → float32-rounded means →
     assign → means → final assign). Narrows the 'iterative algorithms
     are rows-only' carve-out to genuinely unbounded fixpoints; the
-    production path (64-d, xxhash seeds, arrow scorer) stays
+    production path (64-d, xxhash seeds) stays
     vec_kmeans_clusters."""
     from process_spark.operators.similarity import kmeans
 
@@ -1304,7 +1304,7 @@ def pipeline_semantic_dedup_ivf_soft(spark: SparkSession, sf_dir: str) -> DataFr
     )
     cells, _ = ivf_build(e, n_cells=8, seed_hash="md5")
     # top-2 assignment against the refined cells; score mirrors
-    # _assign_cells' dot-with-unit-centroid ranking (oracle form:
+    # ivf_assign's dot-with-unit-centroid ranking (oracle form:
     # (1 + tv·m)/sqrt(1 + m²) — dim 0 of every refined centroid is
     # exactly 1.0f on this fixture)
     m = F.element_at(F.col("centroid"), 2).cast("double")

@@ -636,7 +636,7 @@ timings, engine session):
 | operator | expression path | Arrow/BLAS twin | speedup |
 | --- | --- | --- | --- |
 | semantic near-dup, threshold 0.95 (`near_dup_embeddings[_arrow]`) | 58.1 s | 2.8 s | **21x** — per-block chunked matmul vs one interpreted fold per pair (90,000 pairs found by both; id-sets asserted equal) |
-| k-means k=8, 3 iters (`kmeans(scorer=...)`) | 7.9 s (x50) | 6.2 s (x50) | 1.3x locally, and structurally better: the fused `_refine_cells_arrow` kernel assigns AND partial-sums in one mapInPandas pass, so each iteration shuffles k·n_batches partial rows instead of posexploding corpus x dim into the hash aggregate — the gap widens with corpus and dim (x10: 1.07x; x50: 1.3x) |
+| k-means k=8, 3 iters (`kmeans(scorer=...)`) — **removed** | 7.9 s (x50) | 6.2 s (x50) | historical: the Arrow k-means path (`scorer="arrow"`, the fused `_refine_cells_arrow` kernel) has been deleted — no registered query, CLI path or benchmark workload set it. `kmeans` (and `ivf_build`, which is `kmeans(n_iter=1)`) keeps the one expression kernel |
 | IVF re-rank (`ivf_search[_arrow]`) | — | — | broadcast-probe dict + mapInPandas matmul; corpus never shuffles, cell filter prunes the scan (id-sets asserted equal) |
 | SQ8 int8 k-NN, k=10, 200 queries (`sq8_search[_arrow]`, round 8) | 7.2 s | 2.7 s | **2.7x** — per-batch f64 matmul of the int codes (every intermediate an exactly-representable integer) vs the interpreted per-pair integer fold; the twins are row-IDENTICAL incl. ties (shared exact hash oracle `vec_sq8_knn[_arrow]`; asserted in tests/test_properties.py), so the HOF form stays the oracle and the matmul is the throughput default |
 

@@ -27,6 +27,7 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 RUN_SLOW = os.environ.get("SPARK_GRAFT_SLOW", "") == "1"
+SLOW_SKIP_REASON = "slow profile: run with --runslow or SPARK_GRAFT_SLOW=1"
 
 
 def pytest_addoption(parser):
@@ -50,12 +51,27 @@ def pytest_configure(config):
 def pytest_collection_modifyitems(config, items):
     if config.getoption("--runslow") or RUN_SLOW:
         return
-    skip = pytest.mark.skip(
-        reason="slow profile: run with --runslow or SPARK_GRAFT_SLOW=1"
-    )
+    skip = pytest.mark.skip(reason=SLOW_SKIP_REASON)
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Make the default profile's slow-set skip visible: one summary
+    line with how many ``slow`` tests were skipped and how to run
+    them."""
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple)
+        and rep.longrepr[2].endswith(SLOW_SKIP_REASON)
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} tests marked slow were skipped (default profile); "
+            "run them with --runslow or SPARK_GRAFT_SLOW=1"
+        )
 
 
 def pytest_sessionstart(session):

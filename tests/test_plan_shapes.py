@@ -169,14 +169,18 @@ def test_contamination_check_is_equi_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_ivf_seed_pick_is_take_ordered(spark):
+@pytest.mark.parametrize("seed_hash", ["md5", "xxhash64"])
+def test_ivf_seed_pick_is_take_ordered(spark, seed_hash):
     """The IVF/k-means seed pick must be a distributed TakeOrdered,
-    not a single-partition sort of the whole corpus."""
-    from process_spark.operators.similarity import ivf_build
+    not a single-partition sort of the whole corpus. ``_seed_cells`` is
+    the one seed pick both kmeans and ivf_build (kmeans with n_iter=1)
+    start from; its plan is checked directly because the centroid pin
+    hides it from the returned cells' plan."""
+    from process_spark.operators.similarity import _seed_cells
     from process_spark.sources.io import load
 
     corpus = load(spark, SF, "embeddings")
-    seeds, _ = ivf_build(corpus, n_cells=8)
+    seeds = _seed_cells(corpus, 8, "vec_id", "embedding", 9973, seed_hash)
     plan = seeds._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 

@@ -299,21 +299,6 @@ def test_twins_agree_on_degenerate_vectors(spark):
     assert not any(v in (100, 101, 102) for _, v in hof)
 
 
-def test_kmeans_arrow_assignment_matches_expression_path(spark):
-    """kmeans(scorer="arrow") must produce the same cluster MEMBERSHIP
-    as the expression path — same seeded init, same tie rule (lowest
-    cell_id on equal scores), different scoring layout."""
-    from process_spark.operators.similarity import kmeans
-    from process_spark.sources.io import load
-
-    e = load(spark, "/root/testdata/sf0.001", "embeddings")
-    expr_cents, expr_assign = kmeans(e, k=4, n_iter=2)
-    arw_cents, arw_assign = kmeans(e, k=4, n_iter=2, scorer="arrow")
-    ex = {(r["vec_id"], r["cell_id"]) for r in expr_assign.collect()}
-    ar = {(r["vec_id"], r["cell_id"]) for r in arw_assign.collect()}
-    assert ex == ar
-
-
 @pytest.mark.slow  # measured >8s (r14 durations); full profile via --runslow
 def test_iterative_ops_with_reliable_checkpoint_dir(spark, tmp_path):
     """connected_components / kmeans with checkpoint_dir must write
