@@ -8,7 +8,8 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 
 def cut_lineage(
@@ -33,6 +34,12 @@ def run_concurrently(*thunks: Callable[[], object]) -> list:
     and return their results in submit order. Spark runs several jobs
     at once inside one application; actions queue only when the driver
     calls them one after another. The first thunk (in submit order)
-    that raised re-raises here, after every thunk has finished."""
+    that raised re-raises here, after every thunk has finished.
+
+    Each thunk runs under the caller's local properties (job group,
+    job tags, description) and session tags, so the jobs it launches
+    stay attributable to the calling query; a plain worker thread
+    would start with none of them."""
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        return [f.result() for f in [pool.submit(t) for t in thunks]]
+        return [f.result() for f in [pool.submit(inherit(t)) for t in thunks]]

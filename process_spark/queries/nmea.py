@@ -307,9 +307,10 @@ def nmea_export_json_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata + first track points — write with the JSON sink, read it
     back (schema-on-read), and return the round-tripped docs. This is
     the reference's output stage (SURVEY.md D6)."""
+    from process_spark.queries.io_udf import _SCRATCH
+
     docs = race_docs_from(_pipeline_wide(spark)).drop("day")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__)))), ".scratch", "nmea_json")
+    out_dir = os.path.join(_SCRATCH, "nmea_json")
     write_json_docs(docs, out_dir)
     back = read_json(spark, out_dir)
     return back.select(F.to_json(F.struct(*back.columns)).alias("doc"))

@@ -36,9 +36,11 @@ from process_spark.functions.textfn import tokens
 from process_spark.operators.execution import run_concurrently
 from process_spark.operators.similarity import brute_force_knn
 from process_spark.queries._util import t
+from process_spark.queries.io_udf import _SCRATCH
 from process_spark.queries.registry import register
+from process_spark.queries.streaming import _fresh_scratch, _stream_files
 from process_spark.queries.text import _O_TOKS
-from process_spark.queries.vectors import _o_dot, _o_unit_cte
+from process_spark.queries.vectors import _fixture_e2, _o_dot, _o_unit_cte
 
 #: Fixed BM25 query workload — inlined identically into both engines
 #: (the fixed-seed-constants policy). Mid-frequency fixture terms so
@@ -202,7 +204,6 @@ def text_postings_stored_lifecycle(spark: SparkSession, sf_dir: str) -> DataFram
     and re-probe the full pool. Both phases must reproduce plain
     in-memory BM25 over their corpus slice exactly."""
     from process_spark.operators.dedup import compact_partitioned_index
-    from process_spark.queries.io_udf import _SCRATCH
 
     d = t(spark, sf_dir, "documents")
     qt = _workload_df(spark)
@@ -410,25 +411,6 @@ def _bootstrap_postings(spark: SparkSession, path: str, hist: DataFrame) -> None
     )
 
 
-def _run_postings_wave(spark: SparkSession, base: str, docs_schema) -> None:
-    from process_spark.operators.retrieval import incremental_postings_sink
-
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(base, "incoming"))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_postings_sink(os.path.join(base, "index"))
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-
-
 @register("stream_bm25_index_probe", oracle=_O_STREAM_BM25)
 def stream_bm25_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O74+O95 — the postings index under CONTINUOUS ingestion: the
@@ -444,29 +426,22 @@ def stream_bm25_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the right streaming story for a query-time operator (no per-batch
     emission to keep invariant). Replay and sealed-own crash hygiene
     are pinned in tests/test_retrieval.py."""
-    import shutil
+    from process_spark.operators.retrieval import incremental_postings_sink
 
-    base = os.path.join(_scratch(), "stream_postings_index")
-    shutil.rmtree(base, ignore_errors=True)
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "text")
-    _bootstrap_postings(spark, os.path.join(base, "index"),
-                        docs.filter(F.col("doc_id") % 2 == 0))
-
-    src = os.path.join(base, "incoming")
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    odd.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    odd.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
+    base = _fresh_scratch("stream_postings_index")
+    index = os.path.join(base, "index")
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    _bootstrap_postings(spark, index, docs.filter(F.col("doc_id") % 2 == 0))
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 4 == 1),
+         docs.filter(F.col("doc_id") % 4 == 3)],
+        incremental_postings_sink(index),
+    )
 
     return topk_ranked(
-        bm25_probe_postings(
-            spark, os.path.join(base, "index"), _workload_df(spark)
-        ),
+        bm25_probe_postings(spark, index, _workload_df(spark)),
         "score_e6",
         k=10,
     )
@@ -487,49 +462,35 @@ def stream_bm25_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sealed-own hygiene invariant, now covering all three postings
     components). Final probe = whole-corpus BM25, same oracle as the
     probe twin."""
-    import shutil
+    from process_spark.operators.retrieval import (
+        compact_postings_index,
+        incremental_postings_sink,
+    )
 
-    from process_spark.operators.retrieval import compact_postings_index
-
-    base = os.path.join(_scratch(), "stream_postings_compacted")
-    shutil.rmtree(base, ignore_errors=True)
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "text")
-    _bootstrap_postings(spark, os.path.join(base, "index"),
-                        docs.filter(F.col("doc_id") % 2 == 0))
-
-    src = os.path.join(base, "incoming")
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    # wave 1, then "driver stops"
-    odd.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
-    # offline maintenance between waves: one file per dir, seal history
-    # (postings + membership sidecar), fold the stats deltas. The
-    # compactor passes only NON-batch partition keys down — the sealing
-    # branch requires batch_id to be a rewritable column, not a
-    # partition key it must preserve (operators/dedup.py `has_batch`).
-    compact_postings_index(spark, os.path.join(base, "index"))
-    # wave 2: rest of the stream, same checkpoint (resume)
-    odd.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
+    base = _fresh_scratch("stream_postings_compacted")
+    index = os.path.join(base, "index")
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    _bootstrap_postings(spark, index, docs.filter(F.col("doc_id") % 2 == 0))
+    # Between the waves, the offline maintenance pass: one file per dir,
+    # seal history (postings + membership sidecar), fold the stats
+    # deltas. The compactor passes only NON-batch partition keys down —
+    # the sealing branch requires batch_id to be a rewritable column,
+    # not a partition key it must preserve (operators/dedup.py
+    # `has_batch`).
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 4 == 1),
+         docs.filter(F.col("doc_id") % 4 == 3)],
+        incremental_postings_sink(index),
+        between=lambda: compact_postings_index(spark, index),
+    )
 
     return topk_ranked(
-        bm25_probe_postings(
-            spark, os.path.join(base, "index"), _workload_df(spark)
-        ),
+        bm25_probe_postings(spark, index, _workload_df(spark)),
         "score_e6",
         k=10,
     )
-
-
-def _scratch() -> str:
-    from process_spark.queries.io_udf import _SCRATCH
-
-    return _SCRATCH
 
 
 def _o_mmr(k_sel: int, k_pool: int = 10, cand_sql: str | None = None) -> str:
@@ -757,17 +718,6 @@ def _mmr_pairs(cands: DataFrame, unit: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _fixture_e2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The md5 fixture corpus: embeddings replaced by [1.0, t32] with
-    t32 the per-id md5-derived scalar both engines compute
-    bit-identically (queries/vectors._t32 / _O_T32)."""
-    from process_spark.queries.vectors import _t32
-
-    return t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
-
-
 def _stored_ivf_knn(
     spark: SparkSession,
     e2: DataFrame,
@@ -782,8 +732,6 @@ def _stored_ivf_knn(
     pruned cells — (q_id, vec_id, score, rank). The probed fraction ≈
     n_probe/n_cells of the stored corpus is the whole point: this is
     the channel a 100 TB hybrid stack feeds from."""
-    import os as _os
-
     from process_spark.operators.similarity import (
         ivf_build,
         ivf_probe_cells,
@@ -795,7 +743,7 @@ def _stored_ivf_knn(
     # probe selection, search's re-rank): pin it so the Lloyd
     # refinement chain runs once, not per consumer.
     cells = cells.localCheckpoint(eager=True)
-    path = _os.path.join(_scratch(), scratch_name)
+    path = os.path.join(_SCRATCH, scratch_name)
     q = e2.filter(F.expr(qfilter)).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
@@ -1034,7 +982,7 @@ def _register_retrieval_e2e() -> None:
 
         def lex_ch() -> DataFrame:
             return _stored_lex_channel(
-                spark, d, e, os.path.join(_scratch(), "retrieval_e2e_postings")
+                spark, d, e, os.path.join(_SCRATCH, "retrieval_e2e_postings")
             )
 
         def vec_ch() -> DataFrame:
@@ -1186,46 +1134,44 @@ def stream_bm25_index_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the append-only validation accepts them because the purge removed
     the old identity. Probe B must equal plain BM25 over the UPDATED
     corpus — the entire delete/update machinery is storage detail."""
-    import shutil
-
     from process_spark.operators.retrieval import (
         compact_postings_index,
+        incremental_postings_sink,
         tombstone_postings_docs,
     )
 
-    base = os.path.join(_scratch(), "stream_postings_updated")
-    shutil.rmtree(base, ignore_errors=True)
+    base = _fresh_scratch("stream_postings_updated")
     index = os.path.join(base, "index")
-    d = t(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "text")
-    _bootstrap_postings(spark, index,
-                        docs.filter(F.col("doc_id") % 2 == 0))
-
-    src = os.path.join(base, "incoming")
-    # wave 1: the odd half arrives as a stream
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
-
-    # the re-crawl: every 10th doc is tombstoned...
-    tombstone_postings_docs(
-        spark, index, docs.filter(F.expr(_UPD_FILTER)).select("doc_id")
-    )
-    spark.catalog.refreshByPath(os.path.join(index, "data"))
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    _bootstrap_postings(spark, index, docs.filter(F.col("doc_id") % 2 == 0))
     qt = _workload_df(spark)
-    ra = topk_ranked(
-        bm25_probe_postings(spark, index, qt), "score_e6", k=10
-    ).localCheckpoint(eager=True)  # materialize BEFORE the purge
+    ra = None
 
-    # ...purged at the maintenance pass (tombstones dropped last)...
-    compact_postings_index(spark, index)
-    # ...and the updated versions re-ingest through the same checkpoint
+    def recrawl() -> None:
+        nonlocal ra
+        # the re-crawl: every 10th doc is tombstoned...
+        tombstone_postings_docs(
+            spark, index, docs.filter(F.expr(_UPD_FILTER)).select("doc_id")
+        )
+        spark.catalog.refreshByPath(os.path.join(index, "data"))
+        ra = topk_ranked(
+            bm25_probe_postings(spark, index, qt), "score_e6", k=10
+        ).localCheckpoint(eager=True)  # materialize BEFORE the purge
+        # ...purged at the maintenance pass (tombstones dropped last)...
+        compact_postings_index(spark, index)
+
+    # wave 1: the odd half arrives as a stream; after the re-crawl the
+    # updated versions re-ingest through the same checkpoint
     updated = docs.filter(F.expr(_UPD_FILTER)).select(
         "doc_id", F.concat(F.col("text"), F.lit(_UPDATE_SUFFIX)).alias("text")
     )
-    updated.coalesce(1).write.mode("append").parquet(src)
-    _run_postings_wave(spark, base, docs.schema)
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 2 == 1), updated],
+        incremental_postings_sink(index),
+        between=recrawl,
+    )
 
     rb = topk_ranked(bm25_probe_postings(spark, index, qt), "score_e6", k=10)
     return ra.select(F.lit(1).cast("int").alias("phase"), "*").unionByName(
@@ -1273,17 +1219,13 @@ def text_postings_stats_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle); a crash between a batch append and its stats delta, or a
     legacy index predating the validation sidecar, flips it FALSE and
     the repair is the stats-recomputing compaction."""
-    import shutil
-
     from process_spark.operators.retrieval import (
         incremental_postings_sink,
         postings_stats_audit,
         tombstone_postings_docs,
     )
 
-    base = os.path.join(_scratch(), "postings_stats_audit")
-    shutil.rmtree(base, ignore_errors=True)
-    index = os.path.join(base, "index")
+    index = os.path.join(_fresh_scratch("postings_stats_audit"), "index")
     d = t(spark, sf_dir, "documents")
     docs = d.select("doc_id", "text")
     _bootstrap_postings(spark, index,
@@ -1348,7 +1290,7 @@ def text_postings_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from process_spark.operators.retrieval import postings_skew_report
 
     d = t(spark, sf_dir, "documents")
-    path = os.path.join(_scratch(), "postings_skew_index")
+    path = os.path.join(_SCRATCH, "postings_skew_index")
     write_postings_index(d, path, mode="overwrite")
     spark.catalog.refreshByPath(os.path.join(path, "data"))
     return postings_skew_report(
@@ -1439,7 +1381,7 @@ def _register_retrieval_e2e_fixedq() -> None:
                 spark,
                 d,
                 e,
-                os.path.join(_scratch(), "retrieval_e2e_fixedq_postings"),
+                os.path.join(_SCRATCH, "retrieval_e2e_fixedq_postings"),
                 qfilter=_QF_FIXED,
             )
 

@@ -11,21 +11,28 @@ against a live file/Kafka source with watermarks bounding state.
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from process_spark.queries._util import t
 from process_spark.queries.registry import register
-from process_spark.queries.text import _O_HEAVY_HITTERS, _minhash_md5_ctes
+from process_spark.queries.text import (
+    _MINHASH_INDEX_KW,
+    _O_HEAVY_HITTERS,
+    _minhash_md5_ctes,
+)
 from process_spark.queries.vectors import (
     _ANN_BAND_VALUES,
     _ANN_POOL_VALUES,
     _O_ANN_BUCKET,
+    _ann_banded,
+    _fixture_e2,
     _ivf_md5_ctes,
     _o_dot,
 )
-from process_spark.schemas import TABLES
 
 _MEM_SEQ = 0
 
@@ -76,6 +83,58 @@ def _drain(df: DataFrame, mode: str = "complete") -> DataFrame:
     finally:
         spark.conf.set(conf_key, old)
     return spark.table(name)
+
+
+def _fresh_scratch(name: str) -> str:
+    """The scratch base dir ``name``, emptied: every stored-index
+    stream starts from a clean index, stream source and checkpoint."""
+    from process_spark.queries.io_udf import _SCRATCH
+
+    base = os.path.join(_SCRATCH, name)
+    shutil.rmtree(base, ignore_errors=True)
+    return base
+
+
+def _stream_files(
+    spark: SparkSession,
+    base: str,
+    files: list[DataFrame],
+    sink: Callable[[DataFrame, int], None],
+    between: Callable[[], None] | None = None,
+) -> None:
+    """Drive ``sink`` as the foreachBatch of a file stream: each
+    DataFrame in ``files`` is staged as ONE parquet file under
+    ``base/incoming`` and ``maxFilesPerTrigger=1`` makes each file one
+    micro-batch (batch ids 0, 1, ... in staging order). The stream runs
+    availableNow on the checkpoint ``base/ckpt``, which is removed once
+    the stream has drained.
+
+    ``between`` is the compacted-resume lifecycle: stage and drain the
+    first file, STOP, call ``between()`` (the offline maintenance
+    pass), then stage the rest and RESUME on the same checkpoint — the
+    resumed run continues at the next batch id."""
+    src = os.path.join(base, "incoming")
+    ckpt = os.path.join(base, "ckpt")
+
+    def run() -> None:
+        (
+            spark.readStream.schema(files[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .writeStream.foreachBatch(sink)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+            .awaitTermination()
+        )
+
+    for i, df in enumerate(files):
+        if i == 1 and between is not None:
+            run()
+            between()
+        df.coalesce(1).write.mode("append" if i else "overwrite").parquet(src)
+    run()
+    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -372,10 +431,9 @@ def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the read-back aggregate is batch-count-invariant and carries a
     plain batch oracle (exactly-once: the checkpoint prevents an
     interrupted run from double-appending a batch)."""
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__)))), ".scratch", "stream_batches")
-    import shutil
+    from process_spark.queries.io_udf import _SCRATCH
 
+    out_dir = os.path.join(_SCRATCH, "stream_batches")
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(out_dir + "_ckpt", ignore_errors=True)
     s = _stream_events(spark, sf_dir)
@@ -862,6 +920,22 @@ def incremental_dedup_sink(
     return sink
 
 
+def _bootstrap_band_index(hist: DataFrame, idx_dir: str) -> None:
+    """Store the pre-stream history's MinHash band index under the
+    3-level layout incremental_dedup_sink appends with (batch_id = -1
+    marks the pre-stream history) so partition discovery sees one
+    consistent scheme."""
+    from process_spark.operators.dedup import minhash_band_index
+
+    minhash_band_index(
+        hist, "doc_id", "text", **_MINHASH_INDEX_KW
+    ).withColumn("batch_id", F.lit(-1)).repartition(
+        64, F.col("band_idx"), F.col("band_bucket")
+    ).write.mode("overwrite").partitionBy(
+        "band_idx", "band_bucket", "batch_id"
+    ).parquet(idx_dir)
+
+
 @register(
     "stream_dedup_index_probe",
     # Batch-twin oracle = the WHOLE-CORPUS band join (the same relation
@@ -903,60 +977,18 @@ def stream_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     band join — the same relation the batch lifecycle queries check —
     which the streamed pair union must equal regardless of how the
     source happened to batch the files."""
-    import shutil
-
-    from process_spark.operators.dedup import minhash_band_index
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
+    base = _fresh_scratch("stream_dedup_index")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    _bootstrap_band_index(docs.filter(F.col("doc_id") % 2 == 0), idx_dir)
+    # the stream: odd docs as two files → two micro-batches
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 4 == 1),
+         docs.filter(F.col("doc_id") % 4 == 3)],
+        incremental_dedup_sink(idx_dir, out_dir, _MINHASH_INDEX_KW),
     )
-    base = os.path.join(_SCRATCH, "stream_dedup_index")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    hist = minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
-    )
-    # Bootstrap under the same 3-level layout the sink appends with
-    # (batch_id = -1 marks the pre-stream history) so partition
-    # discovery sees one consistent scheme.
-    hist.withColumn("batch_id", F.lit(-1)).repartition(
-        64, F.col("band_idx"), F.col("band_bucket")
-    ).write.mode("overwrite").partitionBy(
-        "band_idx", "band_bucket", "batch_id"
-    ).parquet(idx_dir)
-
-    # Stage the stream: odd docs as two files → two micro-batches.
-    docs = d.select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_dedup_sink(idx_dir, out_dir, kw)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(out_dir)
         .groupBy("id_a", "id_b")
@@ -1023,41 +1055,21 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the emitted rows equal the batch query's exactly, no matter how
     the source happened to batch the files — the oracle is
     text_heavy_hitters' statement verbatim."""
-    import shutil
-
     from process_spark.functions.textfn import tokens
     from process_spark.operators.sketch import exact_verify, mg_load_state
-    from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.text import _HH_CAPACITY
 
-    base = os.path.join(_SCRATCH, "stream_heavy_hitters")
-    src_dir = os.path.join(base, "incoming")
-    ckpt = os.path.join(base, "ckpt")
+    base = _fresh_scratch("stream_heavy_hitters")
     state_dir = os.path.join(base, "mg_state")
-    shutil.rmtree(base, ignore_errors=True)
-
     d = t(spark, sf_dir, "documents")
     docs = d.select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 2 == 0),
+         docs.filter(F.col("doc_id") % 2 == 1)],
+        mg_state_sink(state_dir, _HH_CAPACITY),
     )
-    q = (
-        stream.writeStream.foreachBatch(mg_state_sink(state_dir, _HH_CAPACITY))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     counters, total = mg_load_state(spark, state_dir, _HH_CAPACITY)
     tk_all = d.select(F.explode(tokens("text")).alias("tok"))
@@ -1091,55 +1103,28 @@ def stream_heavy_hitters_compacted(
     so maintenance moved files, never counts. File-count collapse and
     kill-resume-across-compaction are asserted in
     tests/test_streaming_semantics.py."""
-    import shutil
-
     from process_spark.functions.textfn import tokens
     from process_spark.operators.sketch import (
         exact_verify,
         mg_compact_state,
         mg_load_state,
     )
-    from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.text import _HH_CAPACITY
 
-    base = os.path.join(_SCRATCH, "stream_heavy_hitters_compacted")
-    src_dir = os.path.join(base, "incoming")
-    ckpt = os.path.join(base, "ckpt")
+    base = _fresh_scratch("stream_heavy_hitters_compacted")
     state_dir = os.path.join(base, "mg_state")
-    shutil.rmtree(base, ignore_errors=True)
-
     d = t(spark, sf_dir, "documents")
     docs = d.select("doc_id", "text")
-
-    def run_wave() -> None:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                mg_state_sink(state_dir, _HH_CAPACITY)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    # wave 1: even docs, then "driver stops"
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    run_wave()
-    # offline maintenance between waves: seal state to batch_id = -1
-    mg_compact_state(spark, state_dir, _HH_CAPACITY)
-    # wave 2: odd docs, same checkpoint (resume)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_wave()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    # wave 1: even docs; between the waves, seal state to batch_id = -1;
+    # wave 2: odd docs, resumed on the same checkpoint
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 2 == 0),
+         docs.filter(F.col("doc_id") % 2 == 1)],
+        mg_state_sink(state_dir, _HH_CAPACITY),
+        between=lambda: mg_compact_state(spark, state_dir, _HH_CAPACITY),
+    )
 
     counters, total = mg_load_state(spark, state_dir, _HH_CAPACITY)
     tk_all = d.select(F.explode(tokens("text")).alias("tok"))
@@ -1181,66 +1166,22 @@ def stream_dedup_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs. This is the weekly-compaction rhythm a continuous-ingest
     deployment actually runs; without it, probes open one file per
     ingested batch per partition forever."""
-    import shutil
+    from process_spark.operators.dedup import compact_band_index
 
-    from process_spark.operators.dedup import (
-        compact_band_index,
-        minhash_band_index,
+    base = _fresh_scratch("stream_dedup_index_compacted")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    _bootstrap_band_index(docs.filter(F.col("doc_id") % 2 == 0), idx_dir)
+    # wave 1: first half of the odd docs; between the waves, one file
+    # per dir and history sealed; wave 2: the rest, resumed
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 4 == 1),
+         docs.filter(F.col("doc_id") % 4 == 3)],
+        incremental_dedup_sink(idx_dir, out_dir, _MINHASH_INDEX_KW),
+        between=lambda: compact_band_index(spark, idx_dir),
     )
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
-    base = os.path.join(_SCRATCH, "stream_dedup_index_compacted")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    hist = minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
-    )
-    hist.withColumn("batch_id", F.lit(-1)).repartition(
-        64, F.col("band_idx"), F.col("band_bucket")
-    ).write.mode("overwrite").partitionBy(
-        "band_idx", "band_bucket", "batch_id"
-    ).parquet(idx_dir)
-
-    docs = d.select("doc_id", "text")
-
-    def run_wave() -> None:
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_dedup_sink(idx_dir, out_dir, kw)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    # wave 1: first half of the odd docs, then "driver stops"
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    run_wave()
-    # offline maintenance between waves: one file per dir, seal history
-    compact_band_index(spark, idx_dir)
-    # wave 2: rest of the odd docs, same checkpoint (resume)
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_wave()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(out_dir)
         .groupBy("id_a", "id_b")
@@ -1280,32 +1221,18 @@ def stream_heavy_hitters_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeability makes the output batch-count-invariant, so the oracle
     is text_heavy_hitters_by_lang's statement verbatim — the grouped
     composition of the stream_heavy_hitters durability story."""
-    import shutil
-
     from process_spark.functions.textfn import tokens
     from process_spark.operators.sketch import (
-        frequent_items_by_group,
         mg_load_state_by_group,
         mg_partition_summaries_by_group,
         mg_save_batch_summary_by_group,
     )
-    from process_spark.queries.io_udf import _SCRATCH
 
     cap = 48
-    base = os.path.join(_SCRATCH, "stream_heavy_hitters_by_lang")
-    src_dir = os.path.join(base, "incoming")
-    ckpt = os.path.join(base, "ckpt")
+    base = _fresh_scratch("stream_heavy_hitters_by_lang")
     state_dir = os.path.join(base, "mg_state")
-    shutil.rmtree(base, ignore_errors=True)
-
     d = t(spark, sf_dir, "documents")
     docs = d.select("doc_id", "lang", "text")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         tk = batch_df.select(
@@ -1318,19 +1245,13 @@ def stream_heavy_hitters_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.sparkSession, state_dir, batch_id, counters, totals
         )
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 2 == 0),
+         docs.filter(F.col("doc_id") % 2 == 1)],
+        sink,
     )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     counters, totals = mg_load_state_by_group(spark, state_dir, cap)
     # exact verify, per group: bounded candidate + threshold tables
@@ -1538,6 +1459,22 @@ def incremental_vector_sink(
     return sink
 
 
+def _bootstrap_ivf_index(hist: DataFrame, idx_dir: str) -> DataFrame:
+    """Train the IVF cells ONCE on the pre-stream history (md5 seeds)
+    and store its cell-coded vectors under the (cell_id, batch_id)
+    layout incremental_vector_sink appends with (batch_id = -1 marks
+    the pre-stream history). Returns the cells the sink assigns to."""
+    from process_spark.operators.similarity import ivf_build
+
+    cells, assign = ivf_build(hist, n_cells=8, seed_hash="md5")
+    assign.withColumn("batch_id", F.lit(-1)).repartition(
+        8, F.col("cell_id")
+    ).write.mode("overwrite").partitionBy("cell_id", "batch_id").parquet(
+        idx_dir
+    )
+    return cells
+
+
 @register(
     "stream_semantic_dedup_probe",
     # Batch-twin oracle = the WHOLE-CORPUS cell-blocked threshold pair
@@ -1583,58 +1520,20 @@ def stream_semantic_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-blocked threshold join in one statement; the streamed pair
     union must equal it no matter how the source batched the files.
     Replay safety is pinned in tests/test_streaming_semantics.py."""
-    import shutil
-
-    from process_spark.operators.similarity import ivf_build
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _t32
-
-    base = os.path.join(_SCRATCH, "stream_vec_index")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
+    base = _fresh_scratch("stream_vec_index")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
+    e = _fixture_e2(spark, sf_dir)
+    cells = _bootstrap_ivf_index(e.filter(F.col("vec_id") % 2 == 0), idx_dir)
+    # the stream: odd vectors as two files → two micro-batches
+    _stream_files(
+        spark,
+        base,
+        [e.filter(F.col("vec_id") % 4 == 1),
+         e.filter(F.col("vec_id") % 4 == 3)],
+        incremental_vector_sink(idx_dir, out_dir, cells),
     )
-    cells, assign_even = ivf_build(
-        e.filter(F.col("vec_id") % 2 == 0), n_cells=8, seed_hash="md5"
-    )
-    # Bootstrap under the same (cell_id, batch_id) layout the sink
-    # appends with (batch_id = -1 marks pre-stream history).
-    assign_even.withColumn("batch_id", F.lit(-1)).repartition(
-        8, F.col("cell_id")
-    ).write.mode("overwrite").partitionBy("cell_id", "batch_id").parquet(
-        idx_dir
-    )
-
-    # Stage the stream: odd vectors as two files → two micro-batches.
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_vector_sink(idx_dir, out_dir, cells)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir).select("id_a", "id_b").distinct()
+
 
 
 def incremental_srp_sink(
@@ -1786,6 +1685,17 @@ def incremental_srp_sink(
     return sink
 
 
+def _bootstrap_srp_index(hist: DataFrame, idx_dir: str) -> None:
+    """Band the pre-stream history once through the shared SRP pool and
+    store it under the (band_idx, batch_id) layout incremental_srp_sink
+    appends with (batch_id = -1 marks the pre-stream history)."""
+    _ann_banded(hist).withColumn("batch_id", F.lit(-1)).repartition(
+        64, F.col("band_idx")
+    ).write.mode("overwrite").partitionBy("band_idx", "batch_id").parquet(
+        idx_dir
+    )
+
+
 @register(
     "stream_srp_index_probe",
     # Batch-twin oracle = the whole-corpus SRP band-collision join
@@ -1841,46 +1751,17 @@ def stream_srp_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact same theorem the MinHash streaming sink is graded on, now
     holding for the SRP family too. Signatures are computed once per
     INGESTED vector; a probe never re-bands history."""
-    import shutil
-
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _ann_banded
-
-    base = os.path.join(_SCRATCH, "stream_srp_index")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
+    base = _fresh_scratch("stream_srp_index")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _ann_banded(e.filter(F.col("vec_id") % 2 == 0)).withColumn(
-        "batch_id", F.lit(-1)
-    ).repartition(64, F.col("band_idx")).write.mode("overwrite").partitionBy(
-        "band_idx", "batch_id"
-    ).parquet(idx_dir)
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    _bootstrap_srp_index(e.filter(F.col("vec_id") % 2 == 0), idx_dir)
+    _stream_files(
+        spark,
+        base,
+        [e.filter(F.col("vec_id") % 4 == 1),
+         e.filter(F.col("vec_id") % 4 == 3)],
+        incremental_srp_sink(idx_dir, out_dir),
     )
-    q = (
-        stream.writeStream.foreachBatch(incremental_srp_sink(idx_dir, out_dir))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return (
         spark.read.parquet(out_dir)
         .groupBy("id_a", "id_b")
@@ -1963,56 +1844,17 @@ def stream_semantic_dedup_probe_guarded(
     probe vectors per batch over 8 cells → the hot cells exceed 20;
     3 cells cut per batch) while the pair output stays oracle-exact —
     the x10 probe in SCALE.md shows the bound doing its job."""
-    import shutil
-
-    from process_spark.operators.similarity import ivf_build
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _t32
-
-    base = os.path.join(_SCRATCH, "stream_vec_index_guarded")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
+    base = _fresh_scratch("stream_vec_index_guarded")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
+    e = _fixture_e2(spark, sf_dir)
+    cells = _bootstrap_ivf_index(e.filter(F.col("vec_id") % 2 == 0), idx_dir)
+    _stream_files(
+        spark,
+        base,
+        [e.filter(F.col("vec_id") % 4 == 1),
+         e.filter(F.col("vec_id") % 4 == 3)],
+        incremental_vector_sink(idx_dir, out_dir, cells, max_block_size=20),
     )
-    cells, assign_even = ivf_build(
-        e.filter(F.col("vec_id") % 2 == 0), n_cells=8, seed_hash="md5"
-    )
-    assign_even.withColumn("batch_id", F.lit(-1)).repartition(
-        8, F.col("cell_id")
-    ).write.mode("overwrite").partitionBy("cell_id", "batch_id").parquet(
-        idx_dir
-    )
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_vector_sink(
-                idx_dir, out_dir, cells, max_block_size=20
-            )
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir).select("id_a", "id_b", "n_cut_cells")
 
 
@@ -2054,60 +1896,20 @@ def stream_semantic_dedup_compacted(
     Completes the compacted-resume column of the lifecycle matrix for
     the IVF family (the text family has stream_dedup_index_compacted;
     SRP gets its twin below)."""
-    import shutil
-
     from process_spark.operators.dedup import compact_partitioned_index
-    from process_spark.operators.similarity import ivf_build
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _t32
 
-    base = os.path.join(_SCRATCH, "stream_vec_index_compacted")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
+    base = _fresh_scratch("stream_vec_index_compacted")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
+    e = _fixture_e2(spark, sf_dir)
+    cells = _bootstrap_ivf_index(e.filter(F.col("vec_id") % 2 == 0), idx_dir)
+    _stream_files(
+        spark,
+        base,
+        [e.filter(F.col("vec_id") % 4 == 1),
+         e.filter(F.col("vec_id") % 4 == 3)],
+        incremental_vector_sink(idx_dir, out_dir, cells),
+        between=lambda: compact_partitioned_index(spark, idx_dir, ["cell_id"]),
     )
-    cells, assign_even = ivf_build(
-        e.filter(F.col("vec_id") % 2 == 0), n_cells=8, seed_hash="md5"
-    )
-    assign_even.withColumn("batch_id", F.lit(-1)).repartition(
-        8, F.col("cell_id")
-    ).write.mode("overwrite").partitionBy("cell_id", "batch_id").parquet(
-        idx_dir
-    )
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-
-    def run_wave() -> None:
-        stream = (
-            spark.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_vector_sink(idx_dir, out_dir, cells)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    run_wave()
-    compact_partitioned_index(spark, idx_dir, ["cell_id"])
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_wave()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir).select("id_a", "id_b").distinct()
 
 
@@ -2159,54 +1961,22 @@ def stream_srp_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_ids (round-10 hygiene); the oracle — the whole-corpus
     band-collision join with summed shared-band counts — proves the
     maintenance moved bytes, never candidates."""
-    import shutil
-
     from process_spark.operators.dedup import compact_partitioned_index
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _ann_banded
 
-    base = os.path.join(_SCRATCH, "stream_srp_index_compacted")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
+    base = _fresh_scratch("stream_srp_index_compacted")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _ann_banded(e.filter(F.col("vec_id") % 2 == 0)).withColumn(
-        "batch_id", F.lit(-1)
-    ).repartition(64, F.col("band_idx")).write.mode("overwrite").partitionBy(
-        "band_idx", "batch_id"
-    ).parquet(idx_dir)
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-
-    def run_wave() -> None:
-        stream = (
-            spark.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                incremental_srp_sink(idx_dir, out_dir)
-            )
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    run_wave()
-    compact_partitioned_index(spark, idx_dir, ["band_idx"])
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    run_wave()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _bootstrap_srp_index(e.filter(F.col("vec_id") % 2 == 0), idx_dir)
+    _stream_files(
+        spark,
+        base,
+        [e.filter(F.col("vec_id") % 4 == 1),
+         e.filter(F.col("vec_id") % 4 == 3)],
+        incremental_srp_sink(idx_dir, out_dir),
+        between=lambda: compact_partitioned_index(
+            spark, idx_dir, ["band_idx"]
+        ),
+    )
     return (
         spark.read.parquet(out_dir)
         .groupBy("id_a", "id_b")
@@ -2303,54 +2073,19 @@ def stream_dedup_index_probe_guarded(
     capping is batch-composition-dependent, so the batch-count-
     invariance theorem of the unguarded twin deliberately does NOT
     apply."""
-    import shutil
-
-    from process_spark.operators.dedup import minhash_band_index
-    from process_spark.queries.io_udf import _SCRATCH
-
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
+    base = _fresh_scratch("stream_dedup_index_guarded")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    _bootstrap_band_index(docs.filter(F.col("doc_id") % 2 == 0), idx_dir)
+    _stream_files(
+        spark,
+        base,
+        [docs.filter(F.col("doc_id") % 4 == 1),
+         docs.filter(F.col("doc_id") % 4 == 3)],
+        incremental_dedup_sink(
+            idx_dir, out_dir, _MINHASH_INDEX_KW, max_bucket_size=3
+        ),
     )
-    base = os.path.join(_SCRATCH, "stream_dedup_index_guarded")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    d = t(spark, sf_dir, "documents")
-    minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
-    ).withColumn("batch_id", F.lit(-1)).repartition(
-        64, F.col("band_idx"), F.col("band_bucket")
-    ).write.mode("overwrite").partitionBy(
-        "band_idx", "band_bucket", "batch_id"
-    ).parquet(idx_dir)
-
-    docs = d.select("doc_id", "text")
-    docs.filter(F.col("doc_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_dedup_sink(idx_dir, out_dir, kw, max_bucket_size=3)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir).select(
         "id_a", "id_b", "n_shared_bands", "n_cut_buckets"
     )
@@ -2457,48 +2192,17 @@ def stream_srp_index_probe_guarded(
     of 10-11 vectors, so several hundred groups are cut per batch and
     the candidate set visibly shrinks vs the unguarded twin — all of
     it replayed exactly by the pinned-two-batch oracle."""
-    import shutil
-
-    from process_spark.queries.io_udf import _SCRATCH
-    from process_spark.queries.vectors import _ann_banded
-
-    base = os.path.join(_SCRATCH, "stream_srp_index_guarded")
-    idx_dir = os.path.join(base, "index")
-    src_dir = os.path.join(base, "incoming")
-    out_dir = os.path.join(base, "pairs")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
+    base = _fresh_scratch("stream_srp_index_guarded")
+    idx_dir, out_dir = os.path.join(base, "index"), os.path.join(base, "pairs")
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    _ann_banded(e.filter(F.col("vec_id") % 2 == 0)).withColumn(
-        "batch_id", F.lit(-1)
-    ).repartition(64, F.col("band_idx")).write.mode("overwrite").partitionBy(
-        "band_idx", "batch_id"
-    ).parquet(idx_dir)
-
-    vecs = e.filter(F.col("vec_id") % 2 == 1)
-    vecs.filter(F.col("vec_id") % 4 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    vecs.filter(F.col("vec_id") % 4 == 3).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    _bootstrap_srp_index(e.filter(F.col("vec_id") % 2 == 0), idx_dir)
+    _stream_files(
+        spark,
+        base,
+        [e.filter(F.col("vec_id") % 4 == 1),
+         e.filter(F.col("vec_id") % 4 == 3)],
+        incremental_srp_sink(idx_dir, out_dir, max_bucket_size=8),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            incremental_srp_sink(idx_dir, out_dir, max_bucket_size=8)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(out_dir).select(
         "id_a", "id_b", "n_shared_bands", "n_cut_buckets"
     )

@@ -748,6 +748,14 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("id").alias("doc_id"), "component")
 
 
+#: The stored MinHash band index's config (md5 base hash, 16 concat
+#: bands of 4 over 64 hashes, 16 band buckets) — the engine twin of
+#: :func:`_minhash_md5_ctes`, shared by every band-index query.
+_MINHASH_INDEX_KW = dict(
+    num_hashes=64, bands=16, base_hash="md5", band_key="concat", n_buckets=16
+)
+
+
 def _minhash_md5_ctes(
     where: str = "doc_id % 2 = 0", docs_src: str = "documents"
 ) -> str:
@@ -1001,10 +1009,6 @@ def dedup_band_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from process_spark.operators.dedup import minhash_band_index
     from process_spark.queries.io_udf import _SCRATCH
 
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
     d = t(spark, sf_dir, "documents")
     hist = d.filter(F.col("doc_id") % 2 == 0)
     path = _os.path.join(_SCRATCH, "minhash_band_index")
@@ -1015,16 +1019,18 @@ def dedup_band_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the partition keys, each dir is written by exactly one task →
     # 256 files total. Same small-files discipline a 100 TB index
     # build needs, just visible earlier.
-    idx = minhash_band_index(hist, "doc_id", "text", **kw)
+    idx = minhash_band_index(hist, "doc_id", "text", **_MINHASH_INDEX_KW)
     idx.repartition(64, F.col("band_idx"), F.col("band_bucket")).write.mode(
         "overwrite"
     ).partitionBy("band_idx", "band_bucket").parquet(path)
     stored = spark.read.parquet(path)
 
     batch = d.filter(F.col("doc_id") % 2 == 1)
-    probe = minhash_band_index(batch, "doc_id", "text", **kw).withColumnRenamed(
-        "doc_id", "probe_id"
-    ).localCheckpoint(eager=False)  # bands once: bucket collect + join
+    probe = minhash_band_index(
+        batch, "doc_id", "text", **_MINHASH_INDEX_KW
+    ).withColumnRenamed("doc_id", "probe_id").localCheckpoint(
+        eager=False
+    )  # bands once: bucket collect + join
     buckets = sorted(
         r["band_bucket"]
         for r in probe.select("band_bucket").distinct().collect()
@@ -1091,10 +1097,6 @@ def dedup_band_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from process_spark.operators.dedup import minhash_band_index
     from process_spark.queries.io_udf import _SCRATCH
 
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
     d = t(spark, sf_dir, "documents")
     path = _os.path.join(_SCRATCH, "minhash_band_index_append")
 
@@ -1123,9 +1125,11 @@ def dedup_band_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     write(minhash_band_index(d.filter(F.col("doc_id") % 3 == 0),
-                             "doc_id", "text", **kw), "overwrite")
+                             "doc_id", "text", **_MINHASH_INDEX_KW),
+          "overwrite")
     b1_idx = minhash_band_index(
-        d.filter(F.col("doc_id") % 3 == 1), "doc_id", "text", **kw
+        d.filter(F.col("doc_id") % 3 == 1), "doc_id", "text",
+        **_MINHASH_INDEX_KW,
     ).localCheckpoint(eager=False)  # bands once: probe join + append write
     stored1 = spark.read.parquet(path)
     # Materialize phase-1 candidates BEFORE the append mutates the
@@ -1135,7 +1139,8 @@ def dedup_band_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.catalog.refreshByPath(path)  # drop cached file listing
     stored2 = spark.read.parquet(path)
     b2_idx = minhash_band_index(
-        d.filter(F.col("doc_id") % 3 == 2), "doc_id", "text", **kw
+        d.filter(F.col("doc_id") % 3 == 2), "doc_id", "text",
+        **_MINHASH_INDEX_KW,
     ).localCheckpoint(eager=False)
     return cand1.unionByName(probe_candidates(stored2, b2_idx, 2))
 
@@ -1180,17 +1185,14 @@ def dedup_band_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from process_spark.queries.io_udf import _SCRATCH
 
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
     d = t(spark, sf_dir, "documents")
     path = _os.path.join(_SCRATCH, "minhash_band_index_compact")
 
     # three ingest batches of the historical (even) half
     for i, mode in [(0, "overwrite"), (2, "append"), (4, "append")]:
         minhash_band_index(
-            d.filter(F.col("doc_id") % 6 == i), "doc_id", "text", **kw
+            d.filter(F.col("doc_id") % 6 == i), "doc_id", "text",
+            **_MINHASH_INDEX_KW,
         ).repartition(64, F.col("band_idx"), F.col("band_bucket")).write.mode(
             mode
         ).partitionBy("band_idx", "band_bucket").parquet(path)
@@ -1198,7 +1200,8 @@ def dedup_band_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stored = spark.read.parquet(path)
     probe = minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 1), "doc_id", "text", **kw
+        d.filter(F.col("doc_id") % 2 == 1), "doc_id", "text",
+        **_MINHASH_INDEX_KW,
     ).withColumnRenamed("doc_id", "probe_id").localCheckpoint(eager=False)
     buckets = sorted(  # bounded: bucket domain ≤ n_buckets=16
         r["band_bucket"]
@@ -1293,17 +1296,14 @@ def dedup_band_index_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from process_spark.queries.io_udf import _SCRATCH
 
-    kw = dict(
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
-    )
     d = t(spark, sf_dir, "documents")
     path = _os.path.join(_SCRATCH, "minhash_band_index_updated")
     _shutil.rmtree(path, ignore_errors=True)
 
     write_stored_index(
         minhash_band_index(
-            d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", **kw
+            d.filter(F.col("doc_id") % 2 == 0), "doc_id", "text",
+            **_MINHASH_INDEX_KW,
         ),
         path, ["band_idx", "band_bucket"], "doc_id", mode="overwrite",
         n_write_tasks=64,
@@ -1313,7 +1313,8 @@ def dedup_band_index_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     probe = minhash_band_index(
-        d.filter(F.col("doc_id") % 2 == 1), "doc_id", "text", **kw
+        d.filter(F.col("doc_id") % 2 == 1), "doc_id", "text",
+        **_MINHASH_INDEX_KW,
     ).withColumnRenamed("doc_id", "probe_id").localCheckpoint(
         eager=False
     )  # bands once: bucket collect + both phase joins
@@ -1342,7 +1343,7 @@ def dedup_band_index_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(_BAND_UPDATE_SUFFIX)).alias("text"),
     )
     write_stored_index(
-        minhash_band_index(updated, "doc_id", "text", **kw),
+        minhash_band_index(updated, "doc_id", "text", **_MINHASH_INDEX_KW),
         path, ["band_idx", "band_bucket"], "doc_id", mode="append",
         n_write_tasks=64,
     )
@@ -1848,9 +1849,7 @@ def dedup_lsh_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = t(spark, sf_dir, "documents")
     bidx = minhash_band_index(
-        d, "doc_id", "text",
-        num_hashes=64, bands=16, base_hash="md5", band_key="concat",
-        n_buckets=16,
+        d, "doc_id", "text", **_MINHASH_INDEX_KW
     )
     g = bidx.groupBy("band_idx", "band_hash").agg(
         F.count(F.lit(1)).cast("long").alias("sz")

@@ -779,6 +779,15 @@ def _t32() -> "F.Column":
     return h / F.lit(4294967296.0)
 
 
+def _fixture_e2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The md5 fixture corpus: embeddings replaced by [1.0, t32] with
+    t32 the per-id md5-derived scalar both engines compute
+    bit-identically (:func:`_t32` / :data:`_O_T32`)."""
+    return t(spark, sf_dir, "embeddings").select(
+        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
+    )
+
+
 @register(
     "vec_knn_arrow_idset",
     # score((1,tq),(1,tc)) = (1 + tq·tc) / (sqrt(1+tq²)·sqrt(1+tc²)):
@@ -820,9 +829,7 @@ def vec_knn_arrow_idset(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs 7.5x faster at scale is hash-checked here."""
     from process_spark.operators.similarity import brute_force_knn_arrow
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
@@ -994,9 +1001,7 @@ def vec_ivf_knn_md5_idset(spark: SparkSession, sf_dir: str) -> DataFrame:
     the production queries' concern, see vec_ivf_knn)."""
     from process_spark.operators.similarity import ivf_build, ivf_search
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     cells, assignments = ivf_build(e, n_cells=8, seed_hash="md5")
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
@@ -1046,9 +1051,7 @@ def vec_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from process_spark.queries.io_udf import _SCRATCH
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     cells, assignments = ivf_build(e, n_cells=8, seed_hash="md5")
     path = _os.path.join(_SCRATCH, "ivf_cell_index")
     assignments.repartition(8, F.col("cell_id")).write.mode(
@@ -1148,9 +1151,7 @@ def vec_kmeans_md5_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_kmeans_clusters."""
     from process_spark.operators.similarity import kmeans
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     _, assign = kmeans(e, k=8, n_iter=2, seed_hash="md5")
     return assign.select("vec_id", "cell_id")
 
@@ -1221,9 +1222,7 @@ def pipeline_semantic_dedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     reassignment and the per-cell threshold self-join exactly."""
     from process_spark.operators.similarity import near_dup_embeddings_arrow
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     _, assign = ivf_build(e, n_cells=8, seed_hash="md5")
     pairs = near_dup_embeddings_arrow(
         assign.select("vec_id", "embedding", "cell_id"),
@@ -1299,9 +1298,7 @@ def pipeline_semantic_dedup_ivf_soft(spark: SparkSession, sf_dir: str) -> DataFr
     ranking bit-agree with the oracle's."""
     from process_spark.operators.similarity import near_dup_embeddings_arrow
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     cells, _ = ivf_build(e, n_cells=8, seed_hash="md5")
     # top-2 assignment against the refined cells; score mirrors
     # ivf_assign's dot-with-unit-centroid ranking (oracle form:
@@ -1471,9 +1468,7 @@ def vec_ivf_stored_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from process_spark.queries.io_udf import _SCRATCH
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     e_even = e.filter(F.col("vec_id") % 2 == 0)
     e_odd = e.filter(F.col("vec_id") % 2 == 1)
     cells, assign_even = ivf_build(e_even, n_cells=8, seed_hash="md5")
@@ -1543,9 +1538,7 @@ def vec_ivf_stored_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from process_spark.queries.io_udf import _SCRATCH
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     e_even = e.filter(F.col("vec_id") % 2 == 0)
     e_odd = e.filter(F.col("vec_id") % 2 == 1)
     cells, assign_even = ivf_build(e_even, n_cells=8, seed_hash="md5")
@@ -1702,9 +1695,7 @@ def vec_ivf_stored_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from process_spark.queries.io_udf import _SCRATCH
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     e_even = e.filter(F.col("vec_id") % 2 == 0)
     e_odd = e.filter(F.col("vec_id") % 2 == 1)
     cells, assign_even = ivf_build(e_even, n_cells=8, seed_hash="md5")
@@ -1834,9 +1825,7 @@ def vec_ivf_sq8_md5_idset(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_probe_cells,
     )
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     cells, assignments = ivf_build(e, n_cells=8, seed_hash="md5")
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
@@ -2084,9 +2073,7 @@ def pipeline_semantic_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     from process_spark.operators.dedup import connected_components
     from process_spark.operators.similarity import near_dup_embeddings_arrow
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     _, assign = ivf_build(e, n_cells=8, seed_hash="md5")
     pairs = near_dup_embeddings_arrow(
         assign.select("vec_id", "embedding", "cell_id"),
@@ -2230,9 +2217,7 @@ def pipeline_semantic_keeper_guarded(
         near_dup_embeddings_arrow_with_census,
     )
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     _, assign = ivf_build(e, n_cells=8, seed_hash="md5")
     pairs, census = near_dup_embeddings_arrow_with_census(
         assign.select("vec_id", "embedding", "cell_id"),
@@ -2474,9 +2459,7 @@ def vec_ivf_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     operands, so the comparison is exact."""
     from process_spark.operators.similarity import ivf_build
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     cells, assign = ivf_build(e, n_cells=8, seed_hash="md5")
     cur = assign.groupBy("cell_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
@@ -2625,9 +2608,7 @@ def vec_pq_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from process_spark.queries.io_udf import _SCRATCH
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     hist = e.filter(F.col("vec_id") % 2 == 0)
 
     # train: md5-seeded seed pick + one Lloyd step per 1-d subspace of
@@ -2748,9 +2729,7 @@ def vec_sq8_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort errors (no drift) are the true hash-checked answer there."""
     from process_spark.operators.similarity import _sq8_unit_code
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     norm = F.sqrt(
         F.aggregate(F.col("embedding"), F.lit(0.0), lambda a, x: a + x * x)
     )
@@ -2907,9 +2886,7 @@ def vec_ivf_rebuild_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches and picks by the same exact-integer comparison."""
     from process_spark.operators.similarity import ivf_assign, ivf_build
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     cells, _ = ivf_build(
         e.filter(F.col("vec_id") % 2 == 0), n_cells=8, seed_hash="md5"
     )
@@ -2994,9 +2971,7 @@ def vec_ivf_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from process_spark.operators.similarity import ivf_assign, ivf_build
     from process_spark.queries.io_udf import _SCRATCH
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     e_even = e.filter(F.col("vec_id") % 2 == 0)
     e_odd = e.filter(F.col("vec_id") % 2 == 1)
     cells, assign_even = ivf_build(e_even, n_cells=8, seed_hash="md5")
@@ -3065,9 +3040,7 @@ def vec_ivf_index_repaired(spark: SparkSession, sf_dir: str) -> DataFrame:
     from process_spark.operators.similarity import ivf_build
     from process_spark.queries.io_udf import _SCRATCH
 
-    e = t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.array(F.lit(1.0), _t32()).alias("embedding")
-    )
+    e = _fixture_e2(spark, sf_dir)
     cells, assign = ivf_build(e, n_cells=8, seed_hash="md5")
 
     path = _os.path.join(_SCRATCH, "ivf_index_repaired")

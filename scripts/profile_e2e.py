@@ -24,18 +24,18 @@ def main() -> None:
         write_postings_index,
     )
     from process_spark.queries._util import t
+    from process_spark.queries.io_udf import _SCRATCH
     from process_spark.queries.retrieval import (
         _QF_FIXED,
         _Q_FILTER,
-        _fixture_e2,
         _hybrid_qt,
         _mmr_pairs,
-        _scratch,
         _stored_ivf_knn,
         _unit_of,
         E2E_REL_SCALE,
     )
     from process_spark.operators.retrieval import mmr_rerank
+    from process_spark.queries.vectors import _fixture_e2
     from process_spark.session import get_spark
 
     fixed = "fixedq" in sys.argv[1:]
@@ -58,7 +58,7 @@ def main() -> None:
         t0 = time.perf_counter()
         d = t(spark, sf_dir, "documents")
         e = t(spark, sf_dir, "embeddings")
-        ppath = os.path.join(_scratch(), "profile_e2e_postings")
+        ppath = os.path.join(_SCRATCH, "profile_e2e_postings")
         spark.sparkContext.setJobDescription("e2e: postings write")
         write_postings_index(d, ppath, mode="overwrite")
         spark.catalog.refreshByPath(os.path.join(ppath, "data"))

@@ -336,6 +336,30 @@ def test_iterative_ops_with_reliable_checkpoint_dir(spark, tmp_path):
     }
 
 
+def test_run_concurrently_keeps_job_group_and_tags(spark):
+    """Jobs launched from run_concurrently's worker threads carry the
+    caller's job group and job tags, so a query's pooled channels stay
+    attributable to the query that started them."""
+    from process_spark.operators.execution import run_concurrently
+
+    sc = spark.sparkContext
+    group, tag = "run-concurrently-group", "run-concurrently-tag"
+    df = spark.range(8)
+    sc.setJobGroup(group, "run_concurrently attribution")
+    sc.addJobTag(tag)
+    try:
+        n1, n2, tags = run_concurrently(df.count, df.count, sc.getJobTags)
+    finally:
+        sc.removeJobTag(tag)
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert (n1, n2) == (8, 8)
+    assert tag in tags
+    # both pooled counts ran their jobs inside the caller's group
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+
+
 @settings(max_examples=5, deadline=None)
 @given(
     st.lists(

@@ -91,6 +91,51 @@ def test_foreach_batch_export_totals_match_batch(spark):
         assert v_s == pytest.approx(v_b, abs=1e-6)
 
 
+def _recorded_stream(spark, base, with_between=False):
+    """Drive _stream_files over two hand-built files with a sink that
+    records (batch_id, sorted ids); with ``with_between`` the
+    ``between`` hook records how many batches had run when called."""
+    from process_spark.queries.streaming import _stream_files
+
+    seen, calls = [], []
+
+    def sink(batch_df, batch_id):
+        seen.append((batch_id, sorted(r.id for r in batch_df.collect())))
+
+    files = [
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"),
+        spark.createDataFrame([(3, "c")], "id long, v string"),
+    ]
+    _stream_files(
+        spark,
+        base,
+        files,
+        sink,
+        between=(lambda: calls.append(len(seen))) if with_between else None,
+    )
+    return seen, calls
+
+
+def test_stream_files_one_run_two_batches(spark, tmp_path):
+    import os
+
+    seen, _ = _recorded_stream(spark, str(tmp_path))
+    # one file per micro-batch, in staging order, in ONE run
+    assert seen == [(0, [1, 2]), (1, [3])]
+    assert not os.path.exists(tmp_path / "ckpt")
+
+
+def test_stream_files_between_resumes_on_checkpoint(spark, tmp_path):
+    import os
+
+    seen, calls = _recorded_stream(spark, str(tmp_path), with_between=True)
+    # between ran once, after batch 0 only; the resumed run continued
+    # the same checkpoint at batch 1 (no replay of batch 0)
+    assert calls == [1]
+    assert seen == [(0, [1, 2]), (1, [3])]
+    assert not os.path.exists(tmp_path / "ckpt")
+
+
 def _write_micro_batches(tmpdir):
     """Three parquet files with strictly increasing mtimes — the file
     source (maxFilesPerTrigger=1) turns each into its own micro-batch,
